@@ -1,8 +1,6 @@
 """Deterministic cross-engine digest family (moved from
 operators/dedup.py in round 5 so query modules can share it without
-importing dedup's query registrations — registry.load_all order is
-the driver-verification window and a transitive import would drag
-dedup's 8 queries into it).
+importing dedup's query registrations).
 
 h60 is the determinism backbone of the dedup/sampling/packing layer:
 every pseudo-random decision (MinHash permutations, sampling buckets,
@@ -51,8 +49,7 @@ def cosine(a, b):
     """Cosine similarity of two array<double> columns — sequential
     left-fold on both engines, bit-stable across Spark and DuckDB.
     (Moved from operators/dedup.py in round 7 so similarity/retrieval
-    can import it without dragging dedup's query registrations into
-    the driver window.)"""
+    can import it without importing dedup.)"""
     dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
     na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
     nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x * x))

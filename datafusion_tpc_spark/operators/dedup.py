@@ -44,8 +44,6 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
 
 from datafusion_tpc_spark.catalog import load_table
@@ -63,9 +61,8 @@ from datafusion_tpc_spark.registry import query
 
 # ---- shared deterministic hashing ------------------------------------
 
-# Shingle expressions + shingle_table moved to functions/shingles.py in
-# round 7 (registration-free home so prefix_join can window without
-# dragging this module in); re-bound here for existing callers.
+# Shingle expressions + shingle_table live in functions/shingles.py
+# (shared with prefix_join); re-bound here for existing callers.
 from datafusion_tpc_spark.functions.shingles import (  # noqa: E402
     SHINGLES as _SHINGLES,
     SHINGLES_DUCK as _SHINGLES_DUCK,
@@ -290,13 +287,10 @@ def q_dedup_minhash(spark, sf_dir):
     return lsh_candidate_pairs(band_table(docs), band_cap=None)
 
 
-# Mega-band cap, snapshotted at import so the registered oracle and
-# the query always agree (r11 graduation: the oracle string is built
-# once at registration; a call-time env read could silently diverge
-# from it). Setting the env var AFTER import has NO effect on the
-# registered query by design — runtime configuration goes through
-# lsh_candidate_pairs(band_cap=...) directly (the pytest path).
-_BAND_CAP = int(os.environ.get("SPARK_GRAFT_LSH_BAND_CAP", "1000"))
+# Mega-band cap, shared by the registered query and its oracle string.
+# Other caps go through lsh_candidate_pairs(band_cap=...) directly (the
+# pytest path).
+_BAND_CAP = 1000
 
 _MINHASH_CAPPED_ORACLE = f"""
     WITH sh AS ({_SHINGLES_DUCK}),
@@ -324,11 +318,10 @@ _MINHASH_CAPPED_ORACLE = f"""
 @query("q_dedup_minhash_capped", oracle=_MINHASH_CAPPED_ORACLE)
 def q_dedup_minhash_capped(spark, sf_dir):
     """q_dedup_minhash with the mega-band guard ON: band keys above
-    _BAND_CAP members (SPARK_GRAFT_LSH_BAND_CAP at import, default
-    1000) are dropped before the self-join. At 100 TB this is the
-    difference between a bounded cap²-per-key join and one
-    boilerplate cluster (a license header shared by 10M docs) going
-    quadratic.
+    _BAND_CAP (1000) members are dropped before the self-join. At
+    100 TB this is the difference between a bounded cap²-per-key join
+    and one boilerplate cluster (a license header shared by 10M docs)
+    going quadratic.
 
     EXACT-oracled since r11 (VERDICT r10 item 4): "approximate by
     contract" never meant nondeterministic — the guard is a
@@ -420,9 +413,12 @@ def q_dedup_simhash(spark, sf_dir):
 # ---- 5. embedding cosine near-dup ----------------------------------------
 
 
-# cosine moved to functions/digest.py (r7: registration-free home so
-# similarity/retrieval can window without dragging dedup in); re-exported
-# via the import above for existing callers.
+# cosine lives in functions/digest.py (shared with similarity/retrieval);
+# re-exported via the import above for existing callers.
+
+# q_dedup_embed copies the whole embeddings table to the driver; past
+# this many rows it fails fast instead of risking a driver OOM.
+_EMBED_BROADCAST_MAX = 2_000_000
 
 
 @query(
@@ -448,8 +444,6 @@ def q_dedup_embed(spark, sf_dir):
     broadcast replaces the O(n²)-row join. Beyond broadcastable n, the
     sign-LSH buckets in operators/similarity.py bound the candidate
     set first."""
-    import os
-
     import numpy as np
     import pandas as pd
 
@@ -460,12 +454,11 @@ def q_dedup_embed(spark, sf_dir):
     # baseline, and its broadcast build side is the WHOLE table — the
     # driver copy grows linearly with data. Fail fast past the
     # threshold instead of OOMing a 100 TB driver silently.
-    max_rows = int(os.environ.get("SPARK_GRAFT_EMBED_BROADCAST_MAX", "2000000"))
     n = e.count()
-    if n > max_rows:
+    if n > _EMBED_BROADCAST_MAX:
         raise ValueError(
             f"q_dedup_embed materializes all {n} embeddings on the driver "
-            f"(limit {max_rows}; SPARK_GRAFT_EMBED_BROADCAST_MAX to raise). "
+            f"(limit {_EMBED_BROADCAST_MAX}). "
             "Use q_dedup_embed_lsh — the bucketed scale path — instead."
         )
     rows = e.collect()  # n×64 doubles — driver-side copy of the broadcast side only
@@ -796,8 +789,7 @@ def q_dedup_eval(spark, sf_dir):
     the returned one-row DataFrame is built from the three BIGINT
     literals with the ratio arithmetic left in Spark."""
     # Lazy import (the _sign_bucket precedent at q_dedup_embed_lsh):
-    # dedup is a driver-window module and a top-level import of
-    # prefix_join would drag its registration into the window.
+    # importing dedup does not import prefix_join.
     from datafusion_tpc_spark.operators.prefix_join import (
         drain_sh_caches,
         q_dedup_prefix,

@@ -94,6 +94,7 @@ def _mg_partition(batches):
                 pa.concat_tables([counters, batch_tab])
                 .group_by("token")
                 .aggregate([("residual", "sum")])
+                .select(["token", "residual_sum"])
                 .rename_columns(["token", "residual"])
             )
         if merged.num_rows > _K:

@@ -1,11 +1,6 @@
 """Data-quality diagnostics, second block — distribution-drift audits
 (north-star extension; no reference counterpart — the reference is a
 SQL engine harness, benches/query.rs:24-26 carries no DQ surface).
-
-Separate module from queries/diagnostics.py on purpose: diagnostics is
-inside the round-11 driver window and window modules must not grow or
-be transitively imported (CLAUDE.md import-order rules), so new DQ
-queries land here and rotate into a later window on their own slot.
 """
 
 from __future__ import annotations

@@ -5,9 +5,6 @@ end-to-end where it is most demanding: a DISTRIBUTED writer for a
 format Spark itself cannot write in this container (Avro, no
 spark-avro jar) through the Spark 4 Python DataSource writer API —
 the batch twin of the streaming sinks (stream_sink.py, py_sink.py).
-
-Registered after the round-5 driver window; birth rounds pinned in
-tests/test_registry_order.py.
 """
 
 from __future__ import annotations

@@ -3,8 +3,7 @@ trip, joining the format matrix's write half (Avro: sinks.py via the
 Python DataSource writer; streaming: stream_sink.py / py_sink.py;
 layout: operators/layout.py). The reference's own write path is
 `todo!()` (reference src/object_store/file.rs:215-228), so every sink
-here is beyond-reference surface. Separate module so the pinned
-round-6 driver window (first 50 registrations) is untouched.
+here is beyond-reference surface.
 """
 
 from __future__ import annotations

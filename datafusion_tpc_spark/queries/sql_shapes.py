@@ -4,9 +4,6 @@ sqlparser 0.30 accepts but no prior query here exercised, and that
 Spark only gained natively in the 4.x line (WITH RECURSIVE: Spark
 4.0; lateral correlated subquery joins: 3.2+ with LIMIT support
 maturing in 4.x).
-
-Registered after the round-5 driver window; birth rounds pinned in
-tests/test_registry_order.py.
 """
 
 from __future__ import annotations

@@ -2,8 +2,7 @@
 activity entropy, winsorized means, the Poisson bootstrap,
 theta-sketch set intersection, and a mergeable t-digest-style
 quantile sketch. Extends queries/aggregates.py (stats/regr family)
-and operators/sketches.py (Misra-Gries/KMV) without touching their
-registration order.
+and operators/sketches.py (Misra-Gries/KMV).
 """
 
 from __future__ import annotations

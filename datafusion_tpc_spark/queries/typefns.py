@@ -9,9 +9,6 @@ Reference surface: Arrow 34 Interval(YM/DT/MDN) and Binary types via
 the DataFusion 19 dependency (reference Cargo.toml:15, Cargo.lock:102
 — SURVEY §1 maps them to DayTimeIntervalType/YearMonthIntervalType
 and BinaryType).
-
-Registered after the round-5 driver window; queue for the r6
-staleness rotation (birth round pinned in tests/test_registry_order).
 """
 
 from __future__ import annotations

@@ -28,7 +28,6 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 def get_spark(
     app_name: str = "datafusion_tpc_spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     driver_memory: str = "24g",
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession for local runs.
@@ -38,11 +37,10 @@ def get_spark(
     runtime-settable subset to an externally-owned session.
     """
     cpus = cpus or DEFAULT_CPUS
-    shuffle = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

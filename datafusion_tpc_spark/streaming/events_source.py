@@ -1,8 +1,7 @@
 """Streaming events source — the ts-unit-probing readStream shared by
 stream_queries.py and stream_sink.py (moved out of stream_queries in
-round 5 so stream_sink can import it without dragging stream_queries'
-7 query registrations ahead of q_stream_sink in the driver
-verification window — registry.load_all order).
+round 5 so stream_sink can import it without importing
+stream_queries' 7 query registrations).
 
 The footer probe is the round-4 fix for the recurring testdata quirk:
 events.ts has shipped as BOTH int64-ns and timestamp[µs] across driver
@@ -52,7 +51,7 @@ def drain(df, spark, name_prefix: str):
     """Run a streaming DataFrame to completion into a memory sink and
     return the materialized result (availableNow trigger). Lives here
     (registration-free module) so split streaming query modules can
-    share it without coupling registration order (r6)."""
+    share it without importing each other (r6)."""
     import uuid
 
     name = f"{name_prefix}_{uuid.uuid4().hex[:8]}"

@@ -40,8 +40,8 @@ from datafusion_tpc_spark.streaming.events_source import (  # noqa: F401
 )
 
 # _events_streaming + the ts-unit footer probe live in
-# events_source.py (r5: shared with stream_sink.py without coupling
-# registration order); re-exported for the tests that import them here.
+# events_source.py (r5: shared with stream_sink.py); re-exported for
+# the tests that import them here.
 
 
 from datafusion_tpc_spark.streaming.events_source import drain as _drain  # noqa: E402

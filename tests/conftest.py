@@ -16,11 +16,9 @@ from datafusion_tpc_spark import registry
 from datafusion_tpc_spark.catalog import TABLES
 from datafusion_tpc_spark.session import get_spark
 
-# Canonical registration order BEFORE any test module imports an
-# operator module directly (e.g. tests/test_chunking.py pulling
-# chunking → dedup): conftest imports first under pytest, so the
-# driver-visible window (registry.load_all docstring,
-# tests/test_registry_order.py) stays collection-order-independent.
+# Register every query before any test module imports an operator
+# module directly (e.g. tests/test_chunking.py pulling chunking → dedup),
+# so QUERIES order does not depend on test collection order.
 registry.load_all()
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
@@ -28,7 +26,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="dftpc-tests", cpus=8, shuffle_partitions=8)
+    s = get_spark(app_name="dftpc-tests", cpus=8)
     yield s
     s.stop()
 
