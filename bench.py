@@ -145,8 +145,8 @@ def summarize(results: dict[str, float], results_min: dict[str, float], sf: floa
     }
     # Ambient-load self-adjudication (VERDICT r16 item 3, additions-
     # only): carry the quiet-window MARKER's in-run min (q_dedup_prefix,
-    # the stable min-channel floor tools/bench_quiet_hunt.sh probes)
-    # inside the output so a PERF comparison can tell co-tenant
+    # the stable min-channel floor of the headline set) inside the
+    # output so a PERF comparison can tell co-tenant
     # contamination from a code regression without external context.
     if "q_dedup_prefix" in results_min:
         out["marker_min"] = results_min["q_dedup_prefix"]

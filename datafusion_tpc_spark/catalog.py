@@ -23,7 +23,9 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import threading
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -164,14 +166,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-_PARTSUPP_CACHE = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    ".cache",
-    "partsupp",
-)
-_PARTSUPP_LOCK = threading.Lock()
-
-
 def pid_alive(pid: int) -> bool:
     """Is a cache/run dir's owning process still running? Used by the
     streaming run-dir pruners (ADVICE r14): a dir name embeds its
@@ -222,7 +216,6 @@ def prune_stale_cache_dirs(
     (e.g. a legacy un-fingerprinted file name); `prune_legacy`
     sweeps any dash-less sibling (the partsupp pre-tag key format).
     """
-    import shutil
     import time
 
     prefix = live_key.split("-", 1)[0] + "-"
@@ -267,6 +260,130 @@ def prune_stale_cache_dirs(
             pass
 
 
+CACHE_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".cache"
+)
+
+# One lock per cache entry (not one per module): a build may nest
+# another entry's build (_upserted_ivf_index -> _ivf_index) without
+# deadlocking, and unrelated entries build concurrently.
+_ENTRY_LOCKS: dict[str, threading.Lock] = {}
+_TMP_SEP = "-tmp."  # <key>-tmp.<uuid>: a build's private temp sibling
+
+
+def _entry_lock(key: str) -> threading.Lock:
+    with _MEMO_LOCK:
+        return _ENTRY_LOCKS.setdefault(key, threading.Lock())
+
+
+def fingerprint(*parts) -> str:
+    """Cache-key digest: md5 of the ':'-joined parts, 12 hex chars.
+    Derived artifacts pass their source file's (mtime_ns, size) —
+    testdata drops replace files at the same path, and a path-only key
+    would keep serving the old bytes — plus any recipe constants."""
+    return hashlib.md5(":".join(map(str, parts)).encode()).hexdigest()[:12]
+
+
+def source_stat(sf_dir: str, table: str) -> tuple[int, int]:
+    """(mtime_ns, size) of one testdata table file — the source half
+    of every derived-artifact fingerprint."""
+    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
+    return st.st_mtime_ns, st.st_size
+
+
+def _remove(path: str) -> None:
+    if os.path.isdir(path):
+        shutil.rmtree(path, ignore_errors=True)
+    elif os.path.exists(path):
+        os.remove(path)
+
+
+def cached_dir(root: str, key: str, build, marker: str | None = "_SUCCESS") -> str:
+    """The one build-once path for derived on-disk artifacts; returns
+    ``<root>/<key>``. Warm: a single exists check on the entry's
+    ``marker`` (``None`` = the entry is one file, its own marker).
+    Cold: under the entry's lock, ``build(tmp)`` writes a private
+    sibling temp (a dir, pre-created, or a file path when marker is
+    None), which is published by one atomic rename. A cross-process
+    race loser discards its copy; a markerless dir left at the key by
+    an interrupted unpublished writer is replaced. Superseded siblings
+    sharing the key's '<tag>-' prefix — and temps orphaned by killed
+    builds, which carry that prefix too — go to the two-phase prune.
+    A build that raises publishes nothing."""
+    path = os.path.join(root, key)
+    done = path if marker is None else os.path.join(path, marker)
+    if os.path.exists(done):
+        return path
+    with _entry_lock(path):
+        if os.path.exists(done):
+            return path
+        tmp = f"{path}{_TMP_SEP}{uuid.uuid4().hex[:8]}"
+        os.makedirs(root if marker is None else tmp, exist_ok=True)
+        try:
+            build(tmp)
+        except BaseException:
+            _remove(tmp)
+            raise
+        try:
+            os.replace(tmp, path)
+        except OSError:
+            if not os.path.exists(done):
+                shutil.rmtree(path, ignore_errors=True)
+                os.replace(tmp, path)
+            else:  # lost a cross-process race; ours is spare
+                _remove(tmp)
+        prune_stale_cache_dirs(root, key)
+    return path
+
+
+def bucketed_index(
+    spark: SparkSession, root: str, name: str, dir_key: str, frame, col: str,
+    n_buckets: int, then=None,
+) -> str:
+    """Ensure the bucketed catalog table ``name`` exists; return it.
+    The catalog entry is per session, so the build runs once per
+    (session, name): ``frame()`` is written ``bucketBy/sortBy(col)``
+    to a per-PID data dir (saveAsTable is not atomic, and two
+    processes building one name must not interleave files under one
+    path), under a per-name lock for in-process threads. ``then(path)``
+    is an optional second write step (an ingest append); if it raises,
+    the half-built table is dropped — best effort, the session itself
+    may be what failed — and the ORIGINAL error propagates, so a later
+    tableExists() never serves the incomplete index."""
+    with _entry_lock(name):
+        if not spark.catalog.tableExists(name):
+            key = f"{dir_key}-{os.getpid()}"
+            path = os.path.join(root, key)
+            (
+                frame()
+                .write.mode("overwrite")
+                .option("path", path)
+                .bucketBy(n_buckets, col)
+                .sortBy(col)
+                .saveAsTable(name)
+            )
+            if then is not None:
+                try:
+                    then(path)
+                except BaseException:
+                    try:
+                        spark.sql(f"DROP TABLE IF EXISTS {name}")
+                    except Exception:
+                        pass
+                    raise
+            prune_stale_cache_dirs(root, key)
+    return name
+
+
+_PARTSUPP_ROOT = os.path.join(CACHE_ROOT, "partsupp")
+
+
+def _partsupp_key(sf_dir: str) -> str:
+    """<sf_dir tag>-<lineitem fingerprint>: one live entry per sf_dir,
+    superseded fingerprints pruned under the shared tag prefix."""
+    return f"{fingerprint(sf_dir)[:8]}-{fingerprint(*source_stat(sf_dir, 'lineitem'))}"
+
+
 def derived_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The derived partsupp table (tpch_full.py module docstring),
     MATERIALIZED once per (sf_dir, lineitem fingerprint) instead of
@@ -280,50 +397,24 @@ def derived_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query CTE. Values are bit-stable across the persist hop: MIN
     is order-independent, SUM(l_quantity) sums integral-valued doubles
     exactly, and parquet round-trips doubles losslessly — so the
-    DuckDB oracles keep deriving the CTE inline and still hash-match.
-
-    Cache key = <sf_dir tag>-<md5(lineitem mtime_ns, size)> — the
-    _evolve_dirs fingerprint pattern (testdata drops replace files at
-    the same path); the sf_dir tag prefix lets superseded fingerprints
-    of the SAME sf_dir be pruned when a fresh one is built (ADVICE r6:
-    they leaked unboundedly before). The build races safely:
-    in-process threads serialize on a lock (the 12-concurrent bench),
-    and the write goes to a uuid temp dir atomically renamed into
-    place."""
+    DuckDB oracles keep deriving the CTE inline and still hash-match."""
     configure_runtime(spark)
-    st = os.stat(os.path.join(sf_dir, "lineitem.parquet"))
-    sf_tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    fp = hashlib.md5(f"{st.st_mtime_ns}:{st.st_size}".encode()).hexdigest()[:12]
-    key = f"{sf_tag}-{fp}"
-    path = os.path.join(_PARTSUPP_CACHE, key)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        with _PARTSUPP_LOCK:
-            if not os.path.exists(os.path.join(path, "_SUCCESS")):
-                import uuid
 
-                li = load_table(spark, sf_dir, "lineitem")
-                ps = li.groupBy(
-                    F.col("l_partkey").alias("ps_partkey"),
-                    F.col("l_suppkey").alias("ps_suppkey"),
-                ).agg(
-                    F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias(
-                        "ps_supplycost"
-                    ),
-                    F.sum("l_quantity").alias("ps_availqty"),
-                )
-                tmp = path + "." + uuid.uuid4().hex[:8]
-                ps.write.mode("overwrite").parquet(tmp)
-                try:
-                    os.replace(tmp, path)
-                except OSError:  # lost a cross-process race; ours is spare
-                    import shutil
+    def build(tmp):
+        li = load_table(spark, sf_dir, "lineitem")
+        li.groupBy(
+            F.col("l_partkey").alias("ps_partkey"),
+            F.col("l_suppkey").alias("ps_suppkey"),
+        ).agg(
+            F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias(
+                "ps_supplycost"
+            ),
+            F.sum("l_quantity").alias("ps_availqty"),
+        ).write.mode("overwrite").parquet(tmp)
 
-                    shutil.rmtree(tmp, ignore_errors=True)
-                # Superseded fingerprints of the same sf_dir are dead
-                # (one live lineitem per sf_dir); legacy un-prefixed
-                # keys predate this key format.
-                prune_stale_cache_dirs(_PARTSUPP_CACHE, key, prune_legacy=True)
-    return spark.read.parquet(path)
+    return spark.read.parquet(
+        cached_dir(_PARTSUPP_ROOT, _partsupp_key(sf_dir), build)
+    )
 
 
 def derived_partsupp_bytes(sf_dir: str) -> int:
@@ -332,21 +423,11 @@ def derived_partsupp_bytes(sf_dir: str) -> int:
     data volume instead of hard-coding them (ADVICE r6: q_tpch_q9's
     unconditional F.broadcast(ps) overrides autoBroadcastJoinThreshold
     and would OOM, not fall back, once ps outgrows memory)."""
-    st_path = os.path.join(sf_dir, "lineitem.parquet")
     try:
-        st = os.stat(st_path)
+        path = os.path.join(_PARTSUPP_ROOT, _partsupp_key(sf_dir))
+        return sum(os.path.getsize(os.path.join(path, f)) for f in os.listdir(path))
     except OSError:
         return 0
-    sf_tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    fp = hashlib.md5(f"{st.st_mtime_ns}:{st.st_size}".encode()).hexdigest()[:12]
-    path = os.path.join(_PARTSUPP_CACHE, f"{sf_tag}-{fp}")
-    total = 0
-    try:
-        for f in os.listdir(path):
-            total += os.path.getsize(os.path.join(path, f))
-    except OSError:
-        return 0
-    return total
 
 
 def register_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

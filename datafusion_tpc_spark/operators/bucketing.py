@@ -15,85 +15,46 @@ at all (its write path is todo!(), reference
 src/object_store/file.rs:215-228) — this is Spark-native capability
 beyond it.
 
-The bucketed copies are built once per session into .cache/bucketed
-(external tables — data survives, catalog entries are per-session and
-rebuilt lazily). A foreign session (the external driver's) rebuilds
-on first call; subsequent calls in the same session reuse the catalog
-entry. Both the table NAME and the data dir carry the source's
-(mtime, size) fingerprint — a testdata drop mid-session rebuilds
-instead of serving stale buckets — and the dir is additionally
-per-PID: two processes building concurrently land in disjoint dirs
-instead of interleaving writes under one path (review r7 — a
-pytest+mirror overlap flaked exactly this way); in-process threads
-serialize on a lock around the exists-check+build (the 12-concurrent
-bench would otherwise double-build one table name). Superseded dirs
-are reclaimed by catalog.prune_stale_cache_dirs.
+The bucketed copies are built once per session through
+catalog.bucketed_index (external tables — data survives, catalog
+entries are per-session and rebuilt lazily). Both the table NAME and
+the data dir carry the source's (mtime, size) fingerprint, so a
+testdata drop mid-session rebuilds instead of serving stale buckets.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
-import threading
 
 from pyspark.sql import functions as F
 
 from datafusion_tpc_spark.catalog import (
+    CACHE_ROOT,
+    bucketed_index,
+    fingerprint,
     load_table,
-    prune_stale_cache_dirs,
     sanitized_sf_tag,
+    source_stat,
 )
 from datafusion_tpc_spark.registry import query
 
 _N_BUCKETS = 8
-_CACHE_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".cache", "bucketed"
-)
-_BKT_LOCK = threading.Lock()
-
-
-# Single shared implementation (review r11: the per-site copies
-# drifted and ivf_served kept the unsanitized form) — see catalog.
-_sf_tag = sanitized_sf_tag
+_CACHE_ROOT = os.path.join(CACHE_ROOT, "bucketed")
 
 
 def _bucketed_table(spark, sf_dir: str, table: str, key: str) -> str:
     """Ensure a bucketed copy of `table` exists as a catalog table;
     return its name. Write cost is paid once per (session, sf,
-    source fingerprint); see module docstring for the race and
-    staleness story."""
-    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-    fp = hashlib.md5(f"{st.st_mtime_ns}:{st.st_size}".encode()).hexdigest()[:12]
-    tag = _sf_tag(sf_dir)
-    name = f"{table}_bkt_{tag}_{fp}"
-    with _BKT_LOCK:
-        if not spark.catalog.tableExists(name):
-            # Prune-prefix is namespaced PER TABLE (ADVICE r7): a
-            # shared `{tag}-` prefix let building lineitem mark the
-            # freshly built, catalog-referenced orders dir superseded
-            # (and vice versa), so a later build event could delete
-            # live data out from under the sibling table's reads.
-            dir_key = f"{tag}_{table}-{fp}-{os.getpid()}"
-            path = os.path.join(_CACHE_ROOT, dir_key, table)
-            (
-                load_table(spark, sf_dir, table)
-                .write.mode("overwrite")
-                .option("path", path)
-                .bucketBy(_N_BUCKETS, key)
-                .sortBy(key)
-                .saveAsTable(name)
-            )
-            prune_stale_cache_dirs(_CACHE_ROOT, dir_key)
-            # One-time sweep of pre-r8 shared-prefix dirs
-            # ({tag}-{fp}-{pid}): the per-table rename above means
-            # they match no live prefix anymore and would leak
-            # forever (review r8). No new-scheme entry starts with
-            # "{tag}-" (they start "{tag}_{table}-"), so everything
-            # under the old prefix is superseded; the sentinel key
-            # exists on no disk, and two-phase marking still gives
-            # any straggler pre-r8 process its 6 h reader window.
-            prune_stale_cache_dirs(_CACHE_ROOT, f"{tag}-r8-prefix-rename")
-    return name
+    source fingerprint)."""
+    fp = fingerprint(*source_stat(sf_dir, table))
+    tag = sanitized_sf_tag(sf_dir)
+    # The prune prefix is namespaced PER TABLE (ADVICE r7): a shared
+    # `{tag}-` prefix let building lineitem mark the live orders dir
+    # superseded (and vice versa).
+    return bucketed_index(
+        spark, _CACHE_ROOT, f"{table}_bkt_{tag}_{fp}", f"{tag}_{table}-{fp}",
+        lambda: load_table(spark, sf_dir, table), key, _N_BUCKETS,
+    )
 
 
 @query(

@@ -28,16 +28,17 @@ q_dedup_incr (exact tier) into the full ingest gate.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import threading
 
 from pyspark.sql import functions as F
 
 from datafusion_tpc_spark.catalog import (
+    CACHE_ROOT,
+    bucketed_index,
+    fingerprint,
     load_table,
-    prune_stale_cache_dirs,
     sanitized_sf_tag,
+    source_stat,
 )
 from datafusion_tpc_spark.functions.digest import (
     SPLIT_TRAIN_LT,
@@ -67,12 +68,7 @@ PROBE_DOC = 0  # test-split (bucket 98) at sf0.001/0.01/0.1, with
 BATCH_LT = 40  # batched probe set: test-split docs with doc_id <
                # BATCH_LT — [0, 9, 17] at every shipped sf
 _SRV_BUCKETS = 16
-_CACHE_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-    ".cache",
-    "decontam_served",
-)
-_DCS_LOCK = threading.Lock()
+_CACHE_ROOT = os.path.join(CACHE_ROOT, "decontam_served")
 
 
 def _index_fingerprint(sf_dir: str) -> str:
@@ -80,48 +76,39 @@ def _index_fingerprint(sf_dir: str) -> str:
     a helper (ADVICE r13) so tests targeting the catalog table derive
     its name from HERE instead of re-deriving the recipe inline — a
     recipe change must not silently retarget them at a stale name."""
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    return hashlib.md5(
-        f"{st.st_mtime_ns}:{st.st_size}:{_SUB_L}:{_SUB_S}:"
-        f"{SPLIT_TRAIN_LT}:{_SRV_BUCKETS}".encode()
-    ).hexdigest()[:12]
+    return fingerprint(
+        *source_stat(sf_dir, "documents"), _SUB_L, _SUB_S, SPLIT_TRAIN_LT,
+        _SRV_BUCKETS,
+    )
 
 
 def _index_table_name(sf_dir: str) -> str:
     return f"train_spans_{sanitized_sf_tag(sf_dir)}_{_index_fingerprint(sf_dir)}"
 
 
+def _train_hashes(docs):
+    """DISTINCT h60 of every train-split window of ``docs``."""
+    return (
+        docs.filter(split_bucket() < SPLIT_TRAIN_LT)
+        .select(F.explode(F.expr(_WIN_EXPR)).alias("s"))
+        .select(h60(F.col("s")).alias("h"))
+        .distinct()
+    )
+
+
 def _train_span_index(spark, sf_dir: str) -> str:
     """Ensure the bucketed train-span-hash table exists for this
-    source fingerprint; return its catalog name. Same once-per-
-    (session, sf, fingerprint) build/race/staleness story as
-    operators/lsh_served.py (lock around exists-check+build, per-PID
-    dir, per-prefix prune)."""
+    source fingerprint; return its catalog name (built once per
+    session through catalog.bucketed_index)."""
     fp = _index_fingerprint(sf_dir)
     tag = sanitized_sf_tag(sf_dir)
-    name = f"train_spans_{tag}_{fp}"
-    with _DCS_LOCK:
-        if not spark.catalog.tableExists(name):
-            dir_key = f"{tag}_dcs-{fp}-{os.getpid()}"
-            path = os.path.join(_CACHE_ROOT, dir_key, "spans")
-            docs = load_table(spark, sf_dir, "documents").select(
-                "doc_id", "text"
-            )
-            train_h = (
-                docs.filter(split_bucket() < SPLIT_TRAIN_LT)
-                .select(F.explode(F.expr(_WIN_EXPR)).alias("s"))
-                .select(h60(F.col("s")).alias("h"))
-                .distinct()
-            )
-            (
-                train_h.write.mode("overwrite")
-                .option("path", path)
-                .bucketBy(_SRV_BUCKETS, "h")
-                .sortBy("h")
-                .saveAsTable(name)
-            )
-            prune_stale_cache_dirs(_CACHE_ROOT, dir_key)
-    return name
+    return bucketed_index(
+        spark, _CACHE_ROOT, f"train_spans_{tag}_{fp}", f"{tag}_dcs-{fp}",
+        lambda: _train_hashes(
+            load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        ),
+        "h", _SRV_BUCKETS,
+    )
 
 
 def _probe_hash_counts(spark, sf_dir, pred):
@@ -394,53 +381,24 @@ def _upserted_span_index(spark, sf_dir: str) -> str:
     forms (IN-list point read vs at-scale SortMergeJoin) and the
     bound on each. Maintenance cost is the batch's own windowing +
     one pruned point read + a |new hashes|-row append — independent
-    of corpus size."""
-    fp = hashlib.md5(
-        f"up:{_index_fingerprint(sf_dir)}:{DCS_INGEST_LT}".encode()
-    ).hexdigest()[:12]
+    of corpus size. A failed merge drops the UNMERGED table
+    (bucketed_index's two-step guard): it would silently undercount
+    contamination."""
+    fp = fingerprint("up", _index_fingerprint(sf_dir), DCS_INGEST_LT)
     tag = sanitized_sf_tag(sf_dir)
     name = f"train_spans_up_{tag}_{fp}"
-    with _DCS_LOCK:
-        if not spark.catalog.tableExists(name):
-            dir_key = f"{tag}_dcsup-{fp}-{os.getpid()}"
-            path = os.path.join(_CACHE_ROOT, dir_key, "spans")
-            docs = load_table(spark, sf_dir, "documents").select(
-                "doc_id", "text"
-            )
-            base_h = (
-                docs.filter(F.col("doc_id") >= DCS_INGEST_LT)
-                .filter(split_bucket() < SPLIT_TRAIN_LT)
-                .select(F.explode(F.expr(_WIN_EXPR)).alias("s"))
-                .select(h60(F.col("s")).alias("h"))
-                .distinct()
-            )
-            (
-                base_h.write.mode("overwrite")
-                .option("path", path)
-                .bucketBy(_SRV_BUCKETS, "h")
-                .sortBy("h")
-                .saveAsTable(name)
-            )
-            try:
-                _merge_ingest_batch(
-                    spark, name, path, _ingest_hashes(spark, sf_dir)
-                )
-            except BaseException:
-                # Two-step publish guard (ADVICE r14): the base
-                # saveAsTable above has already registered the table,
-                # so a failed merge must not leave the UNMERGED index
-                # servable — every later tableExists() call in the
-                # session would silently undercount contamination.
-                # Best-effort DROP (ADVICE r15): if the session/JVM is
-                # the thing that failed, the cleanup itself raises —
-                # the ORIGINAL exception must still propagate.
-                try:
-                    spark.sql(f"DROP TABLE IF EXISTS {name}")
-                except BaseException:
-                    pass
-                raise
-            prune_stale_cache_dirs(_CACHE_ROOT, dir_key)
-    return name
+    return bucketed_index(
+        spark, _CACHE_ROOT, name, f"{tag}_dcsup-{fp}",
+        lambda: _train_hashes(
+            load_table(spark, sf_dir, "documents")
+            .select("doc_id", "text")
+            .filter(F.col("doc_id") >= DCS_INGEST_LT)
+        ),
+        "h", _SRV_BUCKETS,
+        then=lambda path: _merge_ingest_batch(
+            spark, name, path, _ingest_hashes(spark, sf_dir)
+        ),
+    )
 
 
 @query("q_dedup_decontam_upsert", oracle=_DCS_SERVED_ORACLE)

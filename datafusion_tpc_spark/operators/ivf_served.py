@@ -46,29 +46,24 @@ this exceeds it on both axes.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
-import shutil
-import threading
-import uuid
 
 from pyspark.sql import functions as F
 
 from datafusion_tpc_spark.catalog import (
+    CACHE_ROOT,
+    cached_dir,
+    fingerprint,
     load_table,
-    prune_stale_cache_dirs,
     sanitized_sf_tag,
+    source_stat,
 )
 from datafusion_tpc_spark.functions.literals import values_df
 from datafusion_tpc_spark.registry import query
 
-_CACHE_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-    ".cache",
-    "ivf_index",
-)
-_IDX_LOCK = threading.Lock()
+_CACHE_ROOT = os.path.join(CACHE_ROOT, "ivf_index")
+_META = "_ivf_codebook.json"
 _K = 20  # top-k served (the q_sim_ivf convention)
 
 
@@ -85,51 +80,34 @@ def _index_tag(sf_dir: str) -> str:
     from datafusion_tpc_spark.functions.ivf import IVF_ITERS, IVF_K
 
     tag = sanitized_sf_tag(sf_dir)  # shared path-safe tag (review r11)
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    fp = hashlib.md5(
-        f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}:"
-        f"{IVF_K}:{IVF_ITERS}".encode()
-    ).hexdigest()[:12]
+    fp = fingerprint(sf_dir, *source_stat(sf_dir, "embeddings"), IVF_K, IVF_ITERS)
     return f"{tag}-{fp}"
+
+
+def _write_cells(df, path: str) -> None:
+    df.repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(path)
+
+
+def _write_codebook(tmp: str, codebook) -> None:
+    with open(os.path.join(tmp, _META), "w") as f:
+        json.dump(codebook, f)
 
 
 def _ivf_index(spark, sf_dir: str) -> tuple[str, list]:
     """Ensure the partitioned assignment + persisted codebook exist;
     return (path, codebook). Build cost is paid once per (sf, source
-    fingerprint); builders follow the shared-cache discipline: lock +
-    uuid temp + atomic rename + two-phase stale pruning."""
-    path = os.path.join(_CACHE_ROOT, _index_tag(sf_dir))
-    meta = os.path.join(path, "_ivf_codebook.json")
-    with _IDX_LOCK:
-        if not os.path.exists(meta):
-            if os.path.exists(path):
-                # dir without its codebook = an interrupted build
-                # (killed between write and rename never leaves this,
-                # but a legacy/partial dir would) — rebuild cleanly
-                shutil.rmtree(path, ignore_errors=True)
-            from datafusion_tpc_spark.functions.ivf import (
-                _trained_codebook,
-                ivf_model,
-            )
+    fingerprint) through catalog.cached_dir; the codebook file is the
+    entry's marker."""
 
-            _, v, _, assigned = ivf_model(spark, sf_dir)
-            codebook = _trained_codebook(spark, sf_dir, v)  # memo hit
-            tmp = os.path.join(_CACHE_ROOT, f"tmp-{uuid.uuid4().hex}")
-            (
-                assigned.repartition("cell")
-                .write.mode("overwrite")
-                .partitionBy("cell")
-                .parquet(tmp)
-            )
-            with open(os.path.join(tmp, "_ivf_codebook.json"), "w") as f:
-                json.dump(codebook, f)
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)  # concurrent winner
-            prune_stale_cache_dirs(_CACHE_ROOT, _index_tag(sf_dir))
-            _sweep_orphan_tmp_dirs()
-    with open(meta) as f:
+    def build(tmp):
+        from datafusion_tpc_spark.functions.ivf import _trained_codebook, ivf_model
+
+        _, v, _, assigned = ivf_model(spark, sf_dir)
+        _write_cells(assigned, tmp)
+        _write_codebook(tmp, _trained_codebook(spark, sf_dir, v))  # memo hit
+
+    path = cached_dir(_CACHE_ROOT, _index_tag(sf_dir), build, marker=_META)
+    with open(os.path.join(path, _META)) as f:
         # preserve NULL components (the zero-norm nullif edge) instead
         # of crashing on float(None) — review r11
         codebook = [
@@ -137,36 +115,6 @@ def _ivf_index(spark, sf_dir: str) -> tuple[str, list]:
             for cid, e in json.load(f)
         ]
     return path, codebook
-
-
-def _sweep_orphan_tmp_dirs(max_age_s: int = 21600) -> None:
-    """Reclaim tmp-<uuid> dirs orphaned by a killed build (review r11:
-    prune_stale_cache_dirs only matches '<sf-tag>-' siblings, so an
-    interrupted write would leak a corpus-sized copy per crash).
-    Unlike fingerprint entries, a tmp dir is NEVER read after its
-    rename attempt, so age-gating on its own mtime is safe — a live
-    concurrent build's tmp is necessarily younger than its run (the
-    6 h window matches the prune_stale_cache_dirs reader budget)."""
-    import time
-
-    cutoff = time.time() - max_age_s
-    try:
-        names = os.listdir(_CACHE_ROOT)
-    except OSError:
-        return
-    for name in names:
-        p = os.path.join(_CACHE_ROOT, name)
-        if not name.startswith("tmp-"):
-            continue
-        try:
-            # a concurrent sweeper can remove the entry between
-            # listdir and getmtime (ADVICE r11) — losing the race is
-            # fine, the dir is gone either way
-            stale = os.path.getmtime(p) < cutoff
-        except OSError:
-            continue
-        if stale:
-            shutil.rmtree(p, ignore_errors=True)
 
 
 def ivf_served_candidates(spark, sf_dir: str):
@@ -372,46 +320,24 @@ def _upserted_ivf_index(spark, sf_dir: str) -> tuple[str, list]:
     precondition: production retrains the coarse quantizer per epoch,
     not per batch) and both generations encode through the identical
     assign_cells projection, so the upserted table is row-identical
-    to the full rebuild. Same lock/fingerprint/atomic-rename story as
-    _ivf_index."""
+    to the full rebuild."""
     from datafusion_tpc_spark.functions.ivf import BATCH_N
 
     _, codebook = _ivf_index(spark, sf_dir)  # trained-once quantizer
-    tag = f"{_index_tag(sf_dir).split('-', 1)[0]}up-" + _index_tag(
-        sf_dir
-    ).split("-", 1)[1] + f"-b{BATCH_N}"
-    path = os.path.join(_CACHE_ROOT, tag)
-    meta = os.path.join(path, "_ivf_codebook.json")
-    with _IDX_LOCK:
-        if not os.path.exists(meta):
-            if os.path.exists(path):
-                shutil.rmtree(path, ignore_errors=True)
-            tmp = os.path.join(_CACHE_ROOT, f"tmp-{uuid.uuid4().hex}")
-            base = _ingest_base(spark, sf_dir, codebook)
-            (
-                base.repartition("cell")
-                .write.mode("overwrite")
-                .partitionBy("cell")
-                .parquet(tmp)
-            )
-            # the incremental ingest: |batch| assignment rows appended
-            # into the existing cell=<n> partition dirs — maintenance
-            # cost is the batch's own encode, independent of corpus
-            # size (the lsh_upsert precedent on the band index)
-            (
-                _ingest_assignment(spark, sf_dir, codebook)
-                .write.mode("append")
-                .partitionBy("cell")
-                .parquet(tmp)
-            )
-            with open(os.path.join(tmp, "_ivf_codebook.json"), "w") as f:
-                json.dump(codebook, f)
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)  # concurrent winner
-            prune_stale_cache_dirs(_CACHE_ROOT, tag)
-            _sweep_orphan_tmp_dirs()
+    tag, fp = _index_tag(sf_dir).split("-", 1)
+
+    def build(tmp):
+        _write_cells(_ingest_base(spark, sf_dir, codebook), tmp)
+        # the incremental ingest: |batch| assignment rows appended
+        # into the existing cell=<n> partition dirs — maintenance
+        # cost is the batch's own encode, independent of corpus
+        # size (the lsh_upsert precedent on the band index)
+        _ingest_assignment(spark, sf_dir, codebook).write.mode(
+            "append"
+        ).partitionBy("cell").parquet(tmp)
+        _write_codebook(tmp, codebook)
+
+    path = cached_dir(_CACHE_ROOT, f"{tag}up-{fp}-b{BATCH_N}", build, marker=_META)
     return path, codebook
 
 

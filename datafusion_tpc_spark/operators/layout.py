@@ -31,16 +31,19 @@ Python cell enumerator.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
+import shutil
 
 from pyspark.sql import functions as F
 
 from datafusion_tpc_spark.catalog import (
+    CACHE_ROOT,
+    cached_dir,
+    fingerprint,
     load_table,
-    prune_stale_cache_dirs,
     sanitized_sf_tag,
+    source_stat,
 )
 from datafusion_tpc_spark.registry import query
 
@@ -57,22 +60,11 @@ def _source_tag(sf_dir: str, table: str = "lineitem") -> str:
     # dirs (CONFLICTING_DIRECTORY_STRUCTURES) or, absolute, an
     # os.path.join escape outside the cache root.
     tag = sanitized_sf_tag(sf_dir)
-    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-    fp = hashlib.md5(
-        f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    return f"{tag}-{fp}"
+    return f"{tag}-{fingerprint(sf_dir, *source_stat(sf_dir, table))}"
 
-
-# Superseded-fingerprint reclamation lives in catalog (one pruning
-# implementation repo-wide; review r7 found this copy drifting from
-# catalog's — notably the age gate that must cover in-flight reads).
-_prune_stale_tags = prune_stale_cache_dirs
 
 _CELLS_BITS = 4  # 16 cells per dimension → 256 z-buckets
-_CACHE_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".cache", "zorder"
-)
+_CACHE_ROOT = os.path.join(CACHE_ROOT, "zorder")
 
 # The demo box predicate (oracled): a 2-D range on both fact keys.
 _P_LO, _P_HI = 100, 600
@@ -104,18 +96,8 @@ def _zorder_copy(spark, sf_dir: str) -> tuple[str, int, int]:
     """Ensure the z-clustered lineitem copy exists; returns
     (path, max_partkey, max_suppkey). Maxes persist beside the data so
     foreign sessions enumerate cells with the writer's exact grid."""
-    path = os.path.join(_CACHE_ROOT, _source_tag(sf_dir))
-    meta = os.path.join(path, "_zorder_meta.json")
-    if os.path.exists(meta):
-        # grid-constant guard: a cached copy built under a different
-        # _CELLS_BITS assigns different cells than box_cover
-        # enumerates — silently wrong pruning; rebuild instead.
-        with open(meta) as f:
-            if json.load(f).get("cells_bits") != _CELLS_BITS:
-                import shutil
 
-                shutil.rmtree(path, ignore_errors=True)
-    if not os.path.exists(meta):
+    def build(tmp):
         li = load_table(spark, sf_dir, "lineitem")
         mx = li.agg(
             F.max("l_partkey").alias("p"), F.max("l_suppkey").alias("s")
@@ -128,13 +110,22 @@ def _zorder_copy(spark, sf_dir: str) -> tuple[str, int, int]:
             .repartition("zbucket")
             .write.mode("overwrite")
             .partitionBy("zbucket")
-            .parquet(path)
+            .parquet(tmp)
         )
-        with open(meta, "w") as f:
+        with open(os.path.join(tmp, "_zorder_meta.json"), "w") as f:
             json.dump({"max_p": mx.p, "max_s": mx.s, "cells_bits": _CELLS_BITS}, f)
-        _prune_stale_tags(_CACHE_ROOT, _source_tag(sf_dir))
-    with open(meta) as f:
+
+    path = cached_dir(
+        _CACHE_ROOT, _source_tag(sf_dir), build, marker="_zorder_meta.json"
+    )
+    with open(os.path.join(path, "_zorder_meta.json")) as f:
         m = json.load(f)
+    if m.get("cells_bits") != _CELLS_BITS:
+        # grid-constant guard: a copy built under a different
+        # _CELLS_BITS assigns different cells than box_cover
+        # enumerates — silently wrong pruning; rebuild instead.
+        shutil.rmtree(path, ignore_errors=True)
+        return _zorder_copy(spark, sf_dir)
     return path, m["max_p"], m["max_s"]
 
 
@@ -206,9 +197,7 @@ def q_layout_zorder(spark, sf_dir):
 
 # ---- small-files compaction (the OPTIMIZE/maintenance half) ----------
 
-_COMPACT_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".cache", "compact"
-)
+_COMPACT_ROOT = os.path.join(CACHE_ROOT, "compact")
 _FRAG_FILES = 64
 _TARGET_FILES = 4
 
@@ -224,19 +213,20 @@ def _compact_dirs(spark, sf_dir):
     repartition pins the output count at the price of one small
     shuffle; production compaction of append-only data keeps the
     no-shuffle coalesce and simply reports the realized count."""
-    tag = _source_tag(sf_dir)
-    frag = os.path.join(_COMPACT_ROOT, tag, "fragmented")
-    comp = os.path.join(_COMPACT_ROOT, tag, "compacted_rp")
-    if not os.path.exists(os.path.join(frag, "_SUCCESS")):
+
+    def build(tmp):
+        frag = os.path.join(tmp, "fragmented")
         load_table(spark, sf_dir, "lineitem").repartition(_FRAG_FILES).write.mode(
             "overwrite"
         ).parquet(frag)
-    if not os.path.exists(os.path.join(comp, "_SUCCESS")):
         spark.read.parquet(frag).repartition(_TARGET_FILES).write.mode(
             "overwrite"
-        ).parquet(comp)
-        _prune_stale_tags(_COMPACT_ROOT, tag)
-    return frag, comp
+        ).parquet(os.path.join(tmp, "compacted_rp"))
+
+    root = cached_dir(
+        _COMPACT_ROOT, _source_tag(sf_dir), build, marker="compacted_rp/_SUCCESS"
+    )
+    return os.path.join(root, "fragmented"), os.path.join(root, "compacted_rp")
 
 
 @query(

@@ -23,16 +23,17 @@ for the exact-dup tier.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import threading
 
 from pyspark.sql import functions as F
 
 from datafusion_tpc_spark.catalog import (
+    CACHE_ROOT,
+    bucketed_index,
+    fingerprint,
     load_table,
-    prune_stale_cache_dirs,
     sanitized_sf_tag,
+    source_stat,
 )
 from datafusion_tpc_spark.functions.literals import values_df
 from datafusion_tpc_spark.functions.shingles import SHINGLES_DUCK
@@ -53,42 +54,33 @@ PROBE_DOC = 8  # fixture doc with LSH candidates at sf0.01 AND sf0.1
 BATCH_N = 10   # batched-admission probe set: doc_id < BATCH_N (the
                # functions/ivf.py BATCH_N convention)
 _SRV_BUCKETS = 16
-_CACHE_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-    ".cache",
-    "lsh_served",
-)
-_LSH_LOCK = threading.Lock()
+_CACHE_ROOT = os.path.join(CACHE_ROOT, "lsh_served")
+
+
+def _index_fingerprint(sf_dir: str) -> str:
+    """Source+recipe fingerprint of the band index — a helper so tests
+    derive the table name from here instead of re-deriving the recipe
+    (the decontam_served._index_fingerprint precedent)."""
+    return fingerprint(*source_stat(sf_dir, "documents"), _K, _BANDS, _SRV_BUCKETS)
+
+
+def _index_table_name(sf_dir: str) -> str:
+    return f"lsh_bands_{sanitized_sf_tag(sf_dir)}_{_index_fingerprint(sf_dir)}"
 
 
 def _lsh_index(spark, sf_dir: str) -> str:
     """Ensure the bucketed band table exists for this source
-    fingerprint; return its catalog name. Same once-per-(session, sf,
-    fingerprint) build/race/staleness story as operators/bucketing.py
-    (lock around exists-check+build, per-PID dir, per-prefix prune)."""
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    fp = hashlib.md5(
-        f"{st.st_mtime_ns}:{st.st_size}:{_K}:{_BANDS}:{_SRV_BUCKETS}".encode()
-    ).hexdigest()[:12]
+    fingerprint; return its catalog name (built once per session
+    through catalog.bucketed_index)."""
+    fp = _index_fingerprint(sf_dir)
     tag = sanitized_sf_tag(sf_dir)
-    name = f"lsh_bands_{tag}_{fp}"
-    with _LSH_LOCK:
-        if not spark.catalog.tableExists(name):
-            dir_key = f"{tag}_lsh-{fp}-{os.getpid()}"
-            path = os.path.join(_CACHE_ROOT, dir_key, "bands")
-            docs = load_table(spark, sf_dir, "documents").select(
-                "doc_id", "text"
-            )
-            (
-                _band_projection(docs)
-                .write.mode("overwrite")
-                .option("path", path)
-                .bucketBy(_SRV_BUCKETS, "bkey")
-                .sortBy("bkey")
-                .saveAsTable(name)
-            )
-            prune_stale_cache_dirs(_CACHE_ROOT, dir_key)
-    return name
+    return bucketed_index(
+        spark, _CACHE_ROOT, f"lsh_bands_{tag}_{fp}", f"{tag}_lsh-{fp}",
+        lambda: _band_projection(
+            load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        ),
+        "bkey", _SRV_BUCKETS,
+    )
 
 
 _LSH_SERVED_ORACLE = f"""
@@ -247,62 +239,36 @@ def _upserted_index(spark, sf_dir: str) -> str:
     the pre-existing corpus (doc_id >= BATCH_N) once, then the ingest
     batch's band rows APPENDED — Spark's bucketed saveAsTable append
     writes per-bucket files alongside the base set and
-    SelectedBucketsCount pruning spans both generations. Same
-    lock/fingerprint/per-PID-dir story as _lsh_index (one lock on
-    purpose: the two indexes share the band computation and a cold
-    start may build both)."""
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    fp = hashlib.md5(
-        f"up:{st.st_mtime_ns}:{st.st_size}:{_K}:{_BANDS}:"
-        f"{_SRV_BUCKETS}:{BATCH_N}".encode()
-    ).hexdigest()[:12]
+    SelectedBucketsCount pruning spans both generations. A failed
+    append drops the batch-less table (bucketed_index's two-step
+    guard): near-dup candidates would otherwise silently undercount."""
+    fp = fingerprint(
+        "up", *source_stat(sf_dir, "documents"), _K, _BANDS, _SRV_BUCKETS, BATCH_N
+    )
     tag = sanitized_sf_tag(sf_dir)
     name = f"lsh_upsert_{tag}_{fp}"
-    with _LSH_LOCK:
-        if not spark.catalog.tableExists(name):
-            dir_key = f"{tag}_lshup-{fp}-{os.getpid()}"
-            path = os.path.join(_CACHE_ROOT, dir_key, "bands")
-            docs = load_table(spark, sf_dir, "documents").select(
-                "doc_id", "text"
-            )
-            base = _band_projection(
-                docs.filter(F.col("doc_id") >= BATCH_N)
-            )
-            (
-                base.write.mode("overwrite")
-                .option("path", path)
-                .bucketBy(_SRV_BUCKETS, "bkey")
-                .sortBy("bkey")
-                .saveAsTable(name)
-            )
-            # the incremental ingest: |batch| x _BANDS rows appended,
-            # bucketed identically — the maintenance cost is the
-            # batch's own minhash, independent of corpus size
-            try:
-                (
-                    _ingest_projection(spark, sf_dir)
-                    .write.mode("append")
-                    .option("path", path)
-                    .bucketBy(_SRV_BUCKETS, "bkey")
-                    .sortBy("bkey")
-                    .saveAsTable(name)
-                )
-            except BaseException:
-                # Two-step publish guard (the decontam_served r15
-                # pattern): the base saveAsTable above has already
-                # registered the table, so a failed ingest append
-                # must not leave the batch-less index servable —
-                # near-dup candidates would silently undercount.
-                # Best-effort DROP (ADVICE r15): if the session/JVM
-                # is the thing that failed, the cleanup itself raises
-                # — the ORIGINAL exception must still propagate.
-                try:
-                    spark.sql(f"DROP TABLE IF EXISTS {name}")
-                except BaseException:
-                    pass
-                raise
-            prune_stale_cache_dirs(_CACHE_ROOT, dir_key)
-    return name
+
+    def base():
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        return _band_projection(docs.filter(F.col("doc_id") >= BATCH_N))
+
+    def ingest(path):
+        # |batch| x _BANDS rows appended, bucketed identically — the
+        # maintenance cost is the batch's own minhash, independent of
+        # corpus size
+        (
+            _ingest_projection(spark, sf_dir)
+            .write.mode("append")
+            .option("path", path)
+            .bucketBy(_SRV_BUCKETS, "bkey")
+            .sortBy("bkey")
+            .saveAsTable(name)
+        )
+
+    return bucketed_index(
+        spark, _CACHE_ROOT, name, f"{tag}_lshup-{fp}", base, "bkey",
+        _SRV_BUCKETS, then=ingest,
+    )
 
 
 @query("q_dedup_lsh_upsert", oracle=_LSH_SERVED_ORACLE)

@@ -19,15 +19,29 @@ per input split, no shuffle anywhere in these plans.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import functions as F
 
-from datafusion_tpc_spark.catalog import load_table
+from datafusion_tpc_spark.catalog import (
+    CACHE_ROOT,
+    cached_dir,
+    fingerprint,
+    load_table,
+    source_stat,
+)
 from datafusion_tpc_spark.registry import query
 
-_CSV_CACHE = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".cache", "csv")
+
+def _round_trip(sf_dir: str, entry: str, build, marker: str = "_SUCCESS") -> str:
+    """Cache dir of one format round-trip copy under csv/<sf_dir key>/
+    (catalog.cached_dir: built once, atomically published)."""
+    root = os.path.join(CACHE_ROOT, "csv", fingerprint(sf_dir))
+    return cached_dir(root, entry, build, marker)
+
+
+def _source_fp(sf_dir: str, table: str) -> str:
+    return fingerprint(*source_stat(sf_dir, table))
 
 
 @query("q_scan_full", oracle="SELECT * FROM lineitem")
@@ -60,13 +74,15 @@ def q_scan_csv(spark, sf_dir):
     Cargo.toml:15). Round-trips `nation` through CSV with an explicit
     schema (no inference — schema inference is a full extra scan at
     scale), so the oracle is the parquet table itself."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    out_dir = os.path.join(_CSV_CACHE, key, "nation")
-    marker = os.path.join(out_dir, "_SUCCESS")
-    if not os.path.exists(marker):
-        load_table(spark, sf_dir, "nation").coalesce(1).write.mode("overwrite").option(
-            "header", "true"
-        ).csv(out_dir)
+    out_dir = _round_trip(
+        sf_dir,
+        f"nation-{_source_fp(sf_dir, 'nation')}",
+        lambda tmp: load_table(spark, sf_dir, "nation")
+        .coalesce(1)
+        .write.mode("overwrite")
+        .option("header", "true")
+        .csv(tmp),
+    )
     return spark.read.schema("n_nationkey int, n_name string, n_regionkey int").option(
         "header", "true"
     ).csv(out_dir)
@@ -77,11 +93,14 @@ def q_scan_json(spark, sf_dir):
     """NDJSON scan — DataFusion 19 NdJsonExec (Tier B, reference
     Cargo.toml:15). Round-trips `region` through newline-delimited
     JSON with an explicit schema."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    out_dir = os.path.join(_CSV_CACHE, key, "region_json")
-    marker = os.path.join(out_dir, "_SUCCESS")
-    if not os.path.exists(marker):
-        load_table(spark, sf_dir, "region").coalesce(1).write.mode("overwrite").json(out_dir)
+    out_dir = _round_trip(
+        sf_dir,
+        f"region_json-{_source_fp(sf_dir, 'region')}",
+        lambda tmp: load_table(spark, sf_dir, "region")
+        .coalesce(1)
+        .write.mode("overwrite")
+        .json(tmp),
+    )
     return spark.read.schema("r_regionkey int, r_name string").json(out_dir)
 
 
@@ -124,11 +143,7 @@ def q_scan_avro(spark, sf_dir):
     DataSource; oracle is the parquet table the bytes came from."""
     from datafusion_tpc_spark.sources import avro_py
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    out_dir = os.path.join(_CSV_CACHE, key, "nation_avro")
-    path = os.path.join(out_dir, "nation.avro")
-    if not os.path.exists(path):
-        os.makedirs(out_dir, exist_ok=True)
+    def build(tmp):
         schema = {
             "type": "record",
             "name": "nation",
@@ -139,11 +154,36 @@ def q_scan_avro(spark, sf_dir):
             ],
         }
         rows = [r.asDict() for r in load_table(spark, sf_dir, "nation").collect()]
-        tmp = path + ".tmp"
-        avro_py.write_avro(tmp, schema, rows, rows_per_block=8)
-        os.replace(tmp, path)
+        avro_py.write_avro(
+            os.path.join(tmp, "nation.avro"), schema, rows, rows_per_block=8
+        )
+
+    out_dir = _round_trip(
+        sf_dir,
+        f"nation_avro-{_source_fp(sf_dir, 'nation')}",
+        build,
+        marker="nation.avro",
+    )
     avro_py.register(spark)
-    return spark.read.format("pyavro").load(path)
+    return spark.read.format("pyavro").load(os.path.join(out_dir, "nation.avro"))
+
+
+def _orders_part(spark, sf_dir: str) -> str:
+    """orders round-tripped through a hive-style layout partitioned on
+    o_orderstatus (shared by q_scan_partitioned and q_scan_dpp)."""
+    from datafusion_tpc_spark.sources.connectors import write_partitioned
+
+    return _round_trip(
+        sf_dir,
+        "orders_part",
+        lambda tmp: write_partitioned(
+            load_table(spark, sf_dir, "orders").select(
+                "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
+            ),
+            tmp,
+            partition_by=["o_orderstatus"],
+        ),
+    )
 
 
 @query(
@@ -164,19 +204,7 @@ def q_scan_partitioned(spark, sf_dir):
     first-order scan optimization: a day-partitioned table answers a
     one-day query by touching 1/365th of the bytes. Oracle is the
     unpartitioned parquet with the same predicate."""
-    from datafusion_tpc_spark.sources.connectors import write_partitioned
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    out_dir = os.path.join(_CSV_CACHE, key, "orders_part")
-    marker = os.path.join(out_dir, "_SUCCESS")
-    if not os.path.exists(marker):
-        write_partitioned(
-            load_table(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
-            ),
-            out_dir,
-            partition_by=["o_orderstatus"],
-        )
+    out_dir = _orders_part(spark, sf_dir)
     return (
         spark.read.parquet(out_dir)
         .filter(F.col("o_orderstatus") == "F")
@@ -190,13 +218,14 @@ def q_scan_orc(spark, sf_dir):
     reader, predicate pushdown, same split-per-stripe parallelism
     story as Parquet). Round-trips `supplier` once; oracle is the
     parquet table the bytes came from."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    out_dir = os.path.join(_CSV_CACHE, key, "supplier_orc")
-    marker = os.path.join(out_dir, "_SUCCESS")
-    if not os.path.exists(marker):
-        load_table(spark, sf_dir, "supplier").coalesce(1).write.mode(
-            "overwrite"
-        ).orc(out_dir)
+    out_dir = _round_trip(
+        sf_dir,
+        "supplier_orc",
+        lambda tmp: load_table(spark, sf_dir, "supplier")
+        .coalesce(1)
+        .write.mode("overwrite")
+        .orc(tmp),
+    )
     return spark.read.orc(out_dir)
 
 
@@ -216,15 +245,18 @@ def q_scan_xml(spark, sf_dir):
     rounded on both sides: XML serializes doubles as decimal text, and
     round-tripping through text is only bit-stable to the printed
     precision."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    out_dir = os.path.join(_CSV_CACHE, key, "part_xml")
-    marker = os.path.join(out_dir, "_SUCCESS")
-    if not os.path.exists(marker):
-        load_table(spark, sf_dir, "part").withColumn(
-            "p_retailprice", F.round("p_retailprice", 2)
-        ).coalesce(1).write.mode("overwrite").option("rootTag", "parts").option(
-            "rowTag", "part"
-        ).format("xml").save(out_dir)
+    out_dir = _round_trip(
+        sf_dir,
+        "part_xml",
+        lambda tmp: load_table(spark, sf_dir, "part")
+        .withColumn("p_retailprice", F.round("p_retailprice", 2))
+        .coalesce(1)
+        .write.mode("overwrite")
+        .option("rootTag", "parts")
+        .option("rowTag", "part")
+        .format("xml")
+        .save(tmp),
+    )
     return (
         spark.read.schema(
             "p_partkey bigint, p_name string, p_brand string, p_type string, "
@@ -264,19 +296,7 @@ def q_scan_dpp(spark, sf_dir):
     a join — at 100 TB it is the difference between scanning one
     day's partitions and scanning the year because the date filter
     lived on the calendar dim."""
-    from datafusion_tpc_spark.sources.connectors import write_partitioned
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    out_dir = os.path.join(_CSV_CACHE, key, "orders_part")
-    marker = os.path.join(out_dir, "_SUCCESS")
-    if not os.path.exists(marker):
-        write_partitioned(
-            load_table(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
-            ),
-            out_dir,
-            partition_by=["o_orderstatus"],
-        )
+    out_dir = _orders_part(spark, sf_dir)
     part = spark.read.parquet(out_dir)
     # createDataFrame ON PURPOSE (r13): converting this dim to a
     # VALUES LocalRelation kills the DPP demonstration — Catalyst

@@ -15,7 +15,13 @@ import uuid
 
 from pyspark.sql import functions as F
 
-from datafusion_tpc_spark.catalog import load_table
+from datafusion_tpc_spark.catalog import (
+    CACHE_ROOT,
+    cached_dir,
+    fingerprint,
+    load_table,
+    source_stat,
+)
 from datafusion_tpc_spark.registry import query
 
 _SINK_CACHE = os.path.join(
@@ -205,42 +211,26 @@ def q_scan_meta(spark, sf_dir):
     return out
 
 
-_EVOLVE_CACHE = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".cache",
-    "evolve",
-)
-
-
 def _evolve_dirs(spark, sf_dir):
     """Two parquet snapshot dirs with DRIFTED schemas (v2 adds a
-    column), built once per sf: the read-side half of schema
-    evolution — q_union_evo covers the DataFrame-level union, this
-    exercises Spark's parquet mergeSchema file-level merge."""
-    import hashlib as _hl
+    column), built once per (sf, customer fingerprint): the read-side
+    half of schema evolution — q_union_evo covers the DataFrame-level
+    union, this exercises Spark's parquet mergeSchema file-level
+    merge."""
 
-    # cache key includes the SOURCE file's (mtime, size) fingerprint:
-    # testdata drops replace files at the same path (FIXTURES.md), and
-    # a _SUCCESS-only check would serve stale snapshots against a
-    # fresh oracle (review r5).
-    src = os.path.join(sf_dir, "customer.parquet")
-    st = os.stat(src)
-    key = _hl.md5(
-        f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(_EVOLVE_CACHE, key)
-    v1 = os.path.join(root, "v1")
-    v2 = os.path.join(root, "v2")
-    cust = load_table(spark, sf_dir, "customer")
-    if not os.path.exists(os.path.join(v1, "_SUCCESS")):
+    def build(tmp):
+        cust = load_table(spark, sf_dir, "customer")
         cust.filter(F.col("c_custkey") % 2 == 0).select(
             "c_custkey", "c_name", "c_mktsegment"
-        ).coalesce(1).write.mode("overwrite").parquet(v1)
-    if not os.path.exists(os.path.join(v2, "_SUCCESS")):
+        ).coalesce(1).write.mode("overwrite").parquet(os.path.join(tmp, "v1"))
         cust.filter(F.col("c_custkey") % 2 == 1).select(
             "c_custkey", "c_name", "c_mktsegment", "c_acctbal"
-        ).coalesce(1).write.mode("overwrite").parquet(v2)
-    return root
+        ).coalesce(1).write.mode("overwrite").parquet(os.path.join(tmp, "v2"))
+
+    key = fingerprint(sf_dir, *source_stat(sf_dir, "customer"))
+    return cached_dir(
+        os.path.join(CACHE_ROOT, "evolve"), key, build, marker="v2/_SUCCESS"
+    )
 
 
 @query(

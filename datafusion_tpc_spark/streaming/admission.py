@@ -43,21 +43,23 @@ so gate throughput is independent of corpus size end to end.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import re
 import shutil
-import threading
 import time
 import uuid
 
 from pyspark.sql import functions as F
 
 from datafusion_tpc_spark.catalog import (
+    CACHE_ROOT,
+    bucketed_index,
+    cached_dir,
+    fingerprint,
     load_table,
     pid_alive,
-    prune_stale_cache_dirs,
     sanitized_sf_tag,
+    source_stat,
 )
 from datafusion_tpc_spark.functions.digest import (
     SPLIT_VAL_LT,
@@ -80,12 +82,7 @@ from datafusion_tpc_spark.operators.dedup import _BAND_SELECTS, _MIN_EXPRS
 from datafusion_tpc_spark.registry import query
 
 _SRV_BUCKETS = 16  # digest index buckets (the lsh/decontam sizing)
-_CACHE_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-    ".cache",
-    "stream_admission",
-)
-_ADM_LOCK = threading.Lock()
+_CACHE_ROOT = os.path.join(CACHE_ROOT, "stream_admission")
 _SLICE_BOUNDS = (4, 7)  # micro-batches: [0,4), [4,7), [7,BATCH_N)
 
 # run output dirs created by this process — excluded from pruning so
@@ -98,30 +95,16 @@ def _digest_index(spark, sf_dir: str) -> str:
     """Ensure the bucketed (doc_id, h=md5(text)) exact-digest table
     exists for this source fingerprint; return its catalog name. The
     persisted form of q_dedup_incr's corpus digest set (its docstring
-    names exactly this index as the at-scale shape). Same lock/
-    fingerprint/per-PID-dir story as the lsh/decontam indexes."""
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    fp = hashlib.md5(
-        f"{st.st_mtime_ns}:{st.st_size}:{_SRV_BUCKETS}".encode()
-    ).hexdigest()[:12]
+    names exactly this index as the at-scale shape)."""
+    fp = fingerprint(*source_stat(sf_dir, "documents"), _SRV_BUCKETS)
     tag = sanitized_sf_tag(sf_dir)
-    name = f"adm_digests_{tag}_{fp}"
-    with _ADM_LOCK:
-        if not spark.catalog.tableExists(name):
-            dir_key = f"{tag}_adm-{fp}-{os.getpid()}"
-            path = os.path.join(_CACHE_ROOT, dir_key, "digests")
-            digests = load_table(spark, sf_dir, "documents").select(
-                "doc_id", F.md5("text").alias("h")
-            )
-            (
-                digests.write.mode("overwrite")
-                .option("path", path)
-                .bucketBy(_SRV_BUCKETS, "h")
-                .sortBy("h")
-                .saveAsTable(name)
-            )
-            prune_stale_cache_dirs(_CACHE_ROOT, dir_key)
-    return name
+    return bucketed_index(
+        spark, _CACHE_ROOT, f"adm_digests_{tag}_{fp}", f"{tag}_adm-{fp}",
+        lambda: load_table(spark, sf_dir, "documents").select(
+            "doc_id", F.md5("text").alias("h")
+        ),
+        "h", _SRV_BUCKETS,
+    )
 
 
 def admission_gate(spark, sf_dir: str, batch_df, timings: dict | None = None):
@@ -351,41 +334,30 @@ def _empty_verdicts(spark):
 def _fixture_dir(spark, sf_dir: str) -> str:
     """3-slice replay fixture of the probe docs (doc_id < BATCH_N),
     one parquet file per micro-batch — the late_data.py pattern
-    (fingerprinted dir, _READY marker, atomic publish)."""
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    tag = sanitized_sf_tag(sf_dir)
-    key = f"{tag}_admfix-{st.st_mtime_ns}-{st.st_size}-{BATCH_N}"
-    path = os.path.join(_CACHE_ROOT, key)
-    with _ADM_LOCK:
-        if not os.path.exists(os.path.join(path, "_READY")):
-            import glob as _glob
+    (fingerprinted dir, _READY marker)."""
+    mtime_ns, size = source_stat(sf_dir, "documents")
+    key = f"{sanitized_sf_tag(sf_dir)}_admfix-{mtime_ns}-{size}-{BATCH_N}"
 
-            docs = (
-                load_table(spark, sf_dir, "documents")
-                .filter(F.col("doc_id") < BATCH_N)
-                .select("doc_id", "text")
+    def build(tmp):
+        # imported here: a module-level import would register late_data's
+        # queries ahead of this module's, changing QUERIES order
+        from datafusion_tpc_spark.streaming.late_data import write_single_file
+
+        docs = (
+            load_table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < BATCH_N)
+            .select("doc_id", "text")
+        )
+        bounds = (0, *_SLICE_BOUNDS, BATCH_N)
+        for j in range(len(bounds) - 1):
+            part = docs.filter(
+                (F.col("doc_id") >= bounds[j]) & (F.col("doc_id") < bounds[j + 1])
             )
-            tmp = path + "." + uuid.uuid4().hex[:8]
-            os.makedirs(tmp)
-            bounds = (0, *_SLICE_BOUNDS, BATCH_N)
-            for j in range(len(bounds) - 1):
-                part = docs.filter(
-                    (F.col("doc_id") >= bounds[j])
-                    & (F.col("doc_id") < bounds[j + 1])
-                )
-                stage = os.path.join(tmp, f"stage{j}")
-                part.coalesce(1).write.mode("overwrite").parquet(stage)
-                src = _glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-                shutil.move(src, os.path.join(tmp, f"{j:02d}.parquet"))
-                shutil.rmtree(stage, ignore_errors=True)
-            with open(os.path.join(tmp, "_READY"), "w") as f:
-                f.write(f"bounds={bounds}\n")
-            try:
-                os.replace(tmp, path)
-            except OSError:  # lost a cross-process race; ours is spare
-                shutil.rmtree(tmp, ignore_errors=True)
-            prune_stale_cache_dirs(_CACHE_ROOT, key)
-    return path
+            write_single_file(part, os.path.join(tmp, f"{j:02d}.parquet"))
+        with open(os.path.join(tmp, "_READY"), "w") as f:
+            f.write(f"bounds={bounds}\n")
+
+    return cached_dir(_CACHE_ROOT, key, build, marker="_READY")
 
 
 def run_admission_stream(spark, sf_dir: str, timings: dict | None = None):

@@ -47,59 +47,53 @@ asserts equals the oracle's analytic count here.
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
-import threading
 
 from pyspark.sql import functions as F
 
-from datafusion_tpc_spark.catalog import load_table, prune_stale_cache_dirs
+from datafusion_tpc_spark.catalog import (
+    CACHE_ROOT,
+    cached_dir,
+    fingerprint,
+    load_table,
+    source_stat,
+)
 from datafusion_tpc_spark.functions.digest import _h60_duck, h60
 from datafusion_tpc_spark.registry import query
 from datafusion_tpc_spark.session import configure_runtime
 
 _SLICES = 5
-_CACHE_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-    ".cache",
-    "late_events",
-)
-_FIXTURE_LOCK = threading.Lock()
+_CACHE_ROOT = os.path.join(CACHE_ROOT, "late_events")
+
+
+def write_single_file(df, dst: str) -> None:
+    """Write ``df`` as exactly one parquet file at ``dst`` (a replay
+    fixture's one-file-per-micro-batch layout)."""
+    stage = dst + ".stage"
+    df.coalesce(1).write.mode("overwrite").parquet(stage)
+    shutil.move(glob.glob(os.path.join(stage, "part-*.parquet"))[0], dst)
+    shutil.rmtree(stage, ignore_errors=True)
 
 
 def _fixture_dir(spark, sf_dir: str) -> str:
     """Ensure the 5-file late-replay copy of events exists; returns its
     path. File j = fresh rows of slice j + the late subset of slice
-    j−3 (h60 % 10 == 0). Keyed by the source file's fingerprint (the
-    _evolve_dirs pattern); mtimes ascend so listing order is batch
-    order. Build-race safety is the derived_partsupp recipe (review
-    r7 — the first cut built into a FIXED `path + ".build"` dir, so
-    two concurrent cold-start executions interleaved writes and could
-    publish a _READY dir missing slice files): in-process threads
-    serialize on a lock, and each build goes to a uuid temp dir
-    atomically renamed into place, so a cross-process race loses
-    cleanly (its spare dir is discarded)."""
-    import hashlib
-
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    sf_tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    fp = hashlib.md5(f"{st.st_mtime_ns}:{st.st_size}".encode()).hexdigest()[:12]
-    key = f"{sf_tag}-{fp}"
-    path = os.path.join(_CACHE_ROOT, key)
-    done = os.path.join(path, "_READY")
-    if os.path.exists(done):
-        return path
-    with _FIXTURE_LOCK:
-        if os.path.exists(done):
-            return path
-        _build_fixture(spark, sf_dir, st, path)
-        prune_stale_cache_dirs(_CACHE_ROOT, key)
-    return path
+    j−3 (h60 % 10 == 0). Keyed by the source file's fingerprint;
+    mtimes ascend so listing order is batch order. The build goes
+    through catalog.cached_dir, so two concurrent cold starts can
+    never publish a _READY dir missing slice files (review r7)."""
+    mtime_ns, size = source_stat(sf_dir, "events")
+    key = f"{fingerprint(sf_dir)[:8]}-{fingerprint(mtime_ns, size)}"
+    return cached_dir(
+        _CACHE_ROOT, key,
+        lambda tmp: _build_fixture(spark, sf_dir, mtime_ns / 1e9, tmp),
+        marker="_READY",
+    )
 
 
-def _build_fixture(spark, sf_dir: str, st, path: str) -> None:
-    import uuid
-
+def _build_fixture(spark, sf_dir: str, src_mtime: float, tmp: str) -> None:
     e = load_table(spark, sf_dir, "events").select(
         "event_id",
         # this drop ships ts as TIMESTAMP_NTZ; normalize to TIMESTAMP
@@ -128,28 +122,16 @@ def _build_fixture(spark, sf_dir: str, st, path: str) -> None:
         (h60(F.concat(F.lit("late:"), F.col("event_id").cast("string"))) % 10 == 0)
         .alias("late"),
     )
-    tmp = path + "." + uuid.uuid4().hex[:8]
-    os.makedirs(tmp)
-    import glob as _glob
-
     for j in range(_SLICES):
         part = tagged.filter(
             ((F.col("slice") == j) & (~F.col("late") | (F.col("slice") > 1)))
             | ((F.col("slice") == j - 3) & F.col("late") & (F.col("slice") <= 1))
         ).drop("slice", "late")
-        stage = os.path.join(tmp, f"stage{j}")
-        part.coalesce(1).write.mode("overwrite").parquet(stage)
-        src = _glob.glob(os.path.join(stage, "part-*.parquet"))[0]
         dst = os.path.join(tmp, f"{j:02d}.parquet")
-        shutil.move(src, dst)
-        shutil.rmtree(stage, ignore_errors=True)
-        os.utime(dst, (st.st_mtime + j + 1, st.st_mtime + j + 1))
+        write_single_file(part, dst)
+        os.utime(dst, (src_mtime + j + 1, src_mtime + j + 1))
     with open(os.path.join(tmp, "_READY"), "w") as f:
         f.write(f"lo={lo} hi={hi} ws={ws}\n")
-    try:
-        os.replace(tmp, path)
-    except OSError:  # lost a cross-process race; ours is spare
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def run_late_stream(spark, sf_dir: str):

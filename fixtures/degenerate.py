@@ -2,8 +2,8 @@
 document shapes a real corpus contains but the synthetic fixture never
 ships — empty text, one- and two-word docs, a language slice with no
 [a-z]+ words. Built once under .cache/degenerate/ from sf0.001 with
-the repo's atomic-build convention (uuid temp dir + rename; source
-(mtime, size) in the fingerprint so a testdata drop rebuilds it).
+catalog.cached_dir (atomic publish; source (mtime, size) in the
+fingerprint so a testdata drop rebuilds it).
 
 Used by tools/degenerate_sweep.py (all-query smoke) and
 tests/test_degenerate_docs.py (the regression subset). The sweep's
@@ -16,15 +16,10 @@ crashes.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
+
+from datafusion_tpc_spark.catalog import CACHE_ROOT, cached_dir, fingerprint
 
 _SRC = "/root/testdata/sf0.001"
-_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    ".cache",
-    "degenerate",
-)
 
 _LIMITS = {
     "region": None,
@@ -64,20 +59,19 @@ def _fingerprint() -> str:
     for t in list(_LIMITS) + ["documents"]:
         st = os.stat(f"{_SRC}/{t}.parquet")
         parts.append(f"{t}:{st.st_mtime_ns}:{st.st_size}")
-    import hashlib
-
-    return hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
+    return fingerprint("|".join(parts))
 
 
 def ensure_degenerate_fixture() -> str:
     """Build (once) and return the fixture directory path."""
-    out = os.path.join(_ROOT, _fingerprint())
-    if os.path.isdir(out) and os.path.exists(os.path.join(out, "_OK")):
-        return out
+    return cached_dir(
+        os.path.join(CACHE_ROOT, "degenerate"), _fingerprint(), _build, marker="_OK"
+    )
+
+
+def _build(tmp: str) -> None:
     import duckdb
 
-    tmp = os.path.join(_ROOT, f"tmp-{uuid.uuid4().hex[:8]}")
-    os.makedirs(tmp, exist_ok=True)
     con = duckdb.connect()
     for t, n in _LIMITS.items():
         lim = f"LIMIT {n}" if n else ""
@@ -101,11 +95,3 @@ def ensure_degenerate_fixture() -> str:
     )
     con.close()
     open(os.path.join(tmp, "_OK"), "w").close()
-    try:
-        os.replace(tmp, out)  # atomic on same filesystem; loser cleaned up
-    except OSError:
-        if os.path.isdir(out):
-            shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            raise
-    return out

@@ -4,7 +4,7 @@ inferred from the queries at reference benches/query.rs:24-26
 (service, pod, container, request_method, response_bytes) and
 src/main.rs:48-52 (service, host, request_bytes).
 
-Seed=42, numpy-only (no Spark dependency): generation happens at
+Seed=42, numpy-only generation (no Spark job): it happens at
 registry import so the DuckDB oracle can read the parquet regardless
 of query/oracle execution order.
 """
@@ -17,6 +17,8 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from datafusion_tpc_spark.catalog import CACHE_ROOT, cached_dir
+
 _SERVICES = ["auth", "api", "web", "billing", "search", "ingest", "cache", "batch"]
 _CONTAINERS = ["app", "sidecar", "init", "proxy"]
 _METHODS = ["GET", "POST", "PUT", "DELETE"]
@@ -24,9 +26,7 @@ _METHOD_P = [0.70, 0.20, 0.05, 0.05]
 
 _ROWS = {"0.001": 10_000, "0.01": 100_000, "0.1": 1_000_000}
 
-_CACHE_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".cache", "logs"
-)
+_CACHE_ROOT = os.path.join(CACHE_ROOT, "logs")
 
 
 def logs_path(sf: str) -> str:
@@ -35,9 +35,16 @@ def logs_path(sf: str) -> str:
 
 def generate(sf: str) -> str:
     """Generate logs for one scale factor (idempotent, seed=42)."""
-    path = logs_path(sf)
-    if os.path.exists(path):
-        return path
+    cached_dir(
+        _CACHE_ROOT,
+        f"sf{sf}",
+        lambda tmp: _write_logs(sf, os.path.join(tmp, "logs.parquet")),
+        marker="logs.parquet",
+    )
+    return logs_path(sf)
+
+
+def _write_logs(sf: str, path: str) -> None:
     n = _ROWS[sf]
     rng = np.random.default_rng(42)
     base_us = np.int64(1_704_067_200_000_000)  # 2024-01-01T00:00:00Z
@@ -67,11 +74,7 @@ def generate(sf: str) -> str:
             "response_bytes": pa.array(response_bytes),
         }
     )
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".tmp"
-    pq.write_table(table, tmp)
-    os.replace(tmp, path)
-    return path
+    pq.write_table(table, path)
 
 
 def ensure_all() -> None:

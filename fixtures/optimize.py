@@ -16,54 +16,34 @@ correctness path reads the raw driver files.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 import pyarrow.parquet as pq
 
-_ROW_GROUP_ROWS = 50_000
-
-_CACHE_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".cache", "opt"
+from datafusion_tpc_spark.catalog import (
+    CACHE_ROOT,
+    cached_dir,
+    fingerprint,
+    source_stat,
 )
+
+_ROW_GROUP_ROWS = 50_000
 
 
 def optimized_dir(sf_dir: str) -> str:
-    key = hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:12]
-    return os.path.join(_CACHE_ROOT, key)
+    return os.path.join(CACHE_ROOT, "opt", fingerprint(sf_dir.rstrip("/")))
 
 
 def ensure_optimized(sf_dir: str, table: str) -> str:
     """Rewrite one table with bounded row groups (idempotent); returns
     the optimized file path. The file name carries the SOURCE's
-    (mtime, size) fingerprint — the repo-wide derived-cache rule: a
-    testdata drop replaces files at the same path, and a path-only
-    key would keep serving the bench stale bytes. The write goes to a
-    uuid temp file atomically renamed into place (two processes
-    racing a fixed '.tmp' would interleave into one corrupt file).
-    Superseded fingerprints, the legacy un-fingerprinted name, and
-    crashed writers' orphan tmp files are reclaimed by the shared
-    two-phase-marked prune (catalog.prune_stale_cache_dirs)."""
-    import uuid
-
-    from datafusion_tpc_spark.catalog import prune_stale_cache_dirs
-
+    (mtime, size) fingerprint, so a testdata drop rebuilds instead of
+    serving the bench stale bytes; the write is published atomically
+    and superseded fingerprints are pruned (catalog.cached_dir)."""
     src = os.path.join(sf_dir, f"{table}.parquet")
-    st = os.stat(src)
-    fp = hashlib.md5(f"{st.st_mtime_ns}:{st.st_size}".encode()).hexdigest()[:12]
-    d = optimized_dir(sf_dir)
-    out = os.path.join(d, f"{table}-{fp}.parquet")
-    if os.path.exists(out):
-        return out
-    os.makedirs(d, exist_ok=True)
-    tbl = pq.read_table(src)
-    tmp = os.path.join(d, f"{table}-{uuid.uuid4().hex[:8]}.tmp")
-    pq.write_table(tbl, tmp, row_group_size=_ROW_GROUP_ROWS)
-    os.replace(tmp, out)
-    # stale `{table}-*` siblings (old fingerprints, orphan tmps) plus
-    # the legacy un-fingerprinted name; other tables' entries in the
-    # same dir don't match this prefix and are left alone
-    prune_stale_cache_dirs(
-        d, os.path.basename(out), extra=(f"{table}.parquet",)
-    )
-    return out
+
+    def build(tmp):
+        pq.write_table(pq.read_table(src), tmp, row_group_size=_ROW_GROUP_ROWS)
+
+    key = f"{table}-{fingerprint(*source_stat(sf_dir, table))}.parquet"
+    return cached_dir(optimized_dir(sf_dir), key, build, marker=None)

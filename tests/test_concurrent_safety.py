@@ -13,6 +13,7 @@ import shutil
 from concurrent.futures import ThreadPoolExecutor
 
 from datafusion_tpc_spark import registry
+from datafusion_tpc_spark.catalog import _TMP_SEP, CACHE_ROOT
 from tests.conftest import SF_DIR
 
 registry.load_all()
@@ -127,10 +128,10 @@ def test_bucketed_sibling_tables_not_superseded(spark):
 
 def test_ivf_index_concurrent_cold(spark):
     """(r11) Two threads racing the IVF materialized-index build from
-    a cold cache: the lock + uuid-temp + atomic-rename discipline must
+    a cold cache: the lock + private-temp + atomic-rename discipline must
     publish exactly one index (no interleaved partial writes), both
-    served results must be identical, and no tmp-<uuid> build dir may
-    survive (the orphan sweep covers crashes; a clean race must not
+    served results must be identical, and no temp build dir may
+    survive (the two-phase prune covers crashes; a clean race must not
     leak at all)."""
     from datafusion_tpc_spark.operators import ivf_served
 
@@ -141,12 +142,12 @@ def test_ivf_index_concurrent_cold(spark):
     assert a == b and len(a) == 20
     entries = os.listdir(ivf_served._CACHE_ROOT)
     assert len([e for e in entries if not e.endswith(".superseded")]) == 1
-    assert not [e for e in entries if e.startswith("tmp-")]
+    assert not [e for e in entries if _TMP_SEP in e]
 
 
 def test_lsh_index_concurrent_cold(spark):
     """(r12) Two threads racing the LSH band-index build from a cold
-    cache: _LSH_LOCK serializes the exists-check+build, so exactly
+    cache: the per-name lock serializes the exists-check+build, so exactly
     one bucketed table is written (saveAsTable is NOT atomic across
     processes — in-process threads must never double-build one
     name), both served results must be identical, and the catalog
@@ -154,17 +155,10 @@ def test_lsh_index_concurrent_cold(spark):
     from datafusion_tpc_spark.operators import lsh_served
 
     # cold: drop the catalog entry and the data dir (session-scoped
-    # catalog + on-disk cache)
-    st = os.stat(os.path.join(SF_DIR, "documents.parquet"))
-    import hashlib as _h
-
-    fp = _h.md5(
-        f"{st.st_mtime_ns}:{st.st_size}:{lsh_served._K}:"
-        f"{lsh_served._BANDS}:{lsh_served._SRV_BUCKETS}".encode()
-    ).hexdigest()[:12]
-    from datafusion_tpc_spark.catalog import sanitized_sf_tag
-
-    name = f"lsh_bands_{sanitized_sf_tag(SF_DIR)}_{fp}"
+    # catalog + on-disk cache). The name comes from the operator's own
+    # helper (the decontam precedent, ADVICE r13): an inline recipe
+    # copy would silently stop exercising the race if the recipe moved.
+    name = lsh_served._index_table_name(SF_DIR)
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     shutil.rmtree(lsh_served._CACHE_ROOT, ignore_errors=True)
 
@@ -177,7 +171,7 @@ def test_lsh_index_concurrent_cold(spark):
 
 def test_decontam_index_concurrent_cold(spark):
     """(r13) Two threads racing the train-span index build from a
-    cold cache: _DCS_LOCK serializes the exists-check+build (the
+    cold cache: the per-name lock serializes the exists-check+build (the
     lsh_served precedent — saveAsTable is not atomic), both served
     results must be identical, and the catalog entry must survive
     for reuse."""
@@ -199,10 +193,11 @@ def test_decontam_index_concurrent_cold(spark):
 
 def test_ivf_upsert_concurrent_cold(spark):
     """(r14) Two threads racing the UPSERTED IVF index build from a
-    cold cache: _upserted_ivf_index takes _IDX_LOCK only AFTER
-    _ivf_index released it (threading.Lock is non-reentrant — nesting
-    would deadlock), so the race must publish exactly two entries
-    (full + upserted), identical served results, no tmp leak."""
+    cold cache: the two entries build under their own per-entry locks
+    (threading.Lock is non-reentrant — one shared lock held across the
+    nested _ivf_index call would deadlock), so the race must publish
+    exactly two entries (full + upserted), identical served results,
+    no tmp leak."""
     from datafusion_tpc_spark.operators import ivf_served
 
     shutil.rmtree(ivf_served._CACHE_ROOT, ignore_errors=True)
@@ -212,12 +207,12 @@ def test_ivf_upsert_concurrent_cold(spark):
     assert a == b and len(a) == 20
     entries = os.listdir(ivf_served._CACHE_ROOT)
     assert len([e for e in entries if not e.endswith(".superseded")]) == 2
-    assert not [e for e in entries if e.startswith("tmp-")]
+    assert not [e for e in entries if _TMP_SEP in e]
 
 
 def test_decontam_upsert_concurrent_cold(spark):
     """(r14) Two threads racing the MERGED span-index build from a
-    cold cache: _DCS_LOCK serializes base-build + merge-append (a
+    cold cache: the per-name lock serializes base-build + merge-append (a
     concurrent interleave could append the batch twice and break the
     DISTINCT-h invariant), both served results identical, no
     duplicate h, catalog entry survives."""
@@ -239,3 +234,29 @@ def test_decontam_upsert_concurrent_cold(spark):
     u = spark.table(up_name)
     assert u.count() == u.distinct().count(), "duplicate h after race"
     assert spark.catalog.tableExists(up_name)
+
+
+def _race_cold(spark, name, cache_dir):
+    """Two threads cold-calling one query: identical, non-empty rows,
+    and no temp build dir left beside the published entry."""
+    shutil.rmtree(cache_dir, ignore_errors=True)
+    fn = registry.QUERIES[name]
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        a, b = list(pool.map(lambda _: _rows(fn(spark, SF_DIR)), range(2)))
+    assert a == b and len(a) > 0
+    assert not [e for e in os.listdir(cache_dir) if _TMP_SEP in e]
+
+
+def test_zorder_copy_concurrent_cold(spark):
+    """Two threads racing the z-clustered lineitem copy from a cold
+    cache: the unpublished overwrite-in-place writer let one thread's
+    mode("overwrite") delete the other's part files mid-write."""
+    from datafusion_tpc_spark.operators import layout
+
+    _race_cold(spark, "q_layout_zorder", layout._CACHE_ROOT)
+
+
+def test_evolve_dirs_concurrent_cold(spark):
+    """Two threads racing the schema-drift snapshot dirs behind
+    q_scan_evolve from a cold cache (same overwrite-in-place hazard)."""
+    _race_cold(spark, "q_scan_evolve", os.path.join(CACHE_ROOT, "evolve"))

@@ -263,36 +263,58 @@ def test_aqe_splits_skewed_join_at_runtime(spark):
                 spark.conf.set(k, v)
 
 
-def test_derived_partsupp_cache_keys_on_source_fingerprint(spark, tmp_path):
-    """catalog.derived_partsupp must rebuild when the source lineitem
-    file changes AT THE SAME PATH (testdata drops do exactly this) —
-    the cache key carries the (mtime_ns, size) fingerprint, the
+def _derived_partsupp(spark, sf_dir):
+    from datafusion_tpc_spark.catalog import derived_partsupp
+
+    return derived_partsupp(spark, sf_dir)
+
+
+def _registered(name):
+    def run(spark, sf_dir):
+        from datafusion_tpc_spark import registry
+
+        registry.load_all()
+        return registry.QUERIES[name](spark, sf_dir)
+
+    return run
+
+
+# derived on-disk artifact → (source table it derives from, builder)
+_DERIVED_CACHES = {
+    "derived_partsupp": ("lineitem", _derived_partsupp),
+    "q_scan_csv": ("nation", _registered("q_scan_csv")),
+    "q_scan_json": ("region", _registered("q_scan_json")),
+    "q_scan_avro": ("nation", _registered("q_scan_avro")),
+}
+
+
+@pytest.mark.parametrize("target", sorted(_DERIVED_CACHES))
+def test_derived_cache_keys_on_source_fingerprint(spark, tmp_path, target):
+    """A derived .cache artifact must rebuild when its source file
+    changes AT THE SAME PATH (testdata drops do exactly this) — the
+    cache key carries the source's (mtime_ns, size) fingerprint, the
     _evolve_dirs pattern ADVICE r5 flagged layout.py for missing.
     Simulated with a private sf_dir copy: build once, swap in a
-    1-row-smaller lineitem, and the derived row count must change."""
-    import os
+    half-size source, and the derived row count must change."""
     import shutil
 
     import pyarrow.parquet as pq
 
-    from datafusion_tpc_spark.catalog import derived_partsupp
-    from tests.conftest import SF_DIR
-
+    table, build = _DERIVED_CACHES[target]
     sf = tmp_path / "sfpriv"
     sf.mkdir()
-    src = os.path.join(SF_DIR, "lineitem.parquet")
-    dst = str(sf / "lineitem.parquet")
-    shutil.copyfile(src, dst)
+    dst = str(sf / f"{table}.parquet")
+    shutil.copyfile(os.path.join(SF_DIR, f"{table}.parquet"), dst)
 
-    n1 = derived_partsupp(spark, str(sf)).count()
-    assert n1 > 0
+    n1 = build(spark, str(sf)).count()
+    assert n1 > 1
 
     tbl = pq.read_table(dst)
     pq.write_table(tbl.slice(0, tbl.num_rows // 2), dst + ".tmp")
     os.replace(dst + ".tmp", dst)
 
-    n2 = derived_partsupp(spark, str(sf)).count()
+    n2 = build(spark, str(sf)).count()
     assert n2 < n1, (
-        "partsupp cache served stale data after the source file was "
+        f"{target} served stale data after the source file was "
         f"replaced in place ({n1} == {n2})"
     )
